@@ -9,9 +9,9 @@ The two properties that matter at 100 TB:
 - **mergeable**: CMS(A ∪ B) = CMS(A) + CMS(B) element-wise, so
   partial sketches combine associatively across partitions, days, or
   micro-batches — the same reason HLL is the production distinct
-  counter. ``accumulate_cms`` below is exactly that: per-micro-batch
-  partial grids committed idempotently (overwrite-by-batch_id, the
-  incremental-LSH pattern), summed on read; the batch grid and the
+  counter. ``events_cms_streaming_counters`` below is exactly that:
+  per-micro-batch ``cms_partial`` grids committed idempotently by
+  ``streaming.fixtures.drain_partials``, summed on read; the batch grid and the
   drained streaming grid are equal INTEGER BY INTEGER, which the
   parity test pins.
 - **never underestimates**: est >= exact always. The heavy-hitters
@@ -29,8 +29,6 @@ all the work); the heavy-hitter estimate joins the bounded
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -185,26 +183,6 @@ def cms_partial(events: DataFrame, production_hash: bool = False) -> DataFrame:
     )
 
 
-def accumulate_cms(events_stream: DataFrame, counters_dir: str,
-                   checkpoint_dir: str):
-    """foreachBatch CMS accumulation: each micro-batch commits its
-    partial grid to ``counters_dir/batch_id=N`` (overwrite — a
-    retried batch replaces its own partition instead of
-    double-counting). Read the accumulated sketch back with
-    :func:`read_cms`."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(counters_dir, f"batch_id={batch_id}")
-        cms_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_cms(spark: SparkSession, counters_dir: str) -> DataFrame:
     """Merge the accumulated per-batch grids: element-wise sum."""
     return (
@@ -246,27 +224,13 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 
 def _q_cms_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
+    from ..streaming.fixtures import drain_partials
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_cms_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the merged grid is partitioning-invariant by
-    # mergeability, which CMS_COUNTERS_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_cms(
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            counters_dir=os.path.join(work, "counters"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
+    commits = drain_partials(
+        spark, stage(spark, sf_dir), cms_partial, scratch_dir("dbp_cms_work_")
+    )
     return (
-        read_cms(spark, os.path.join(work, "counters"))
+        read_cms(spark, commits)
         .select(
             F.col("row_idx").cast("int").alias("row_idx"),
             F.col("col").cast("int").alias("col"),

@@ -322,25 +322,9 @@ ORACLES["events_value_percentiles_exact"] = PERCENTILES_DUCK
 # merge — the same invariant family as events_cms_streaming_counters.
 
 
-def accumulate_user_counts(events_stream: DataFrame, counts_dir: str,
-                           checkpoint_dir: str):
-    import os
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(counts_dir, f"batch_id={batch_id}")
-        (
-            batch_df.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+def user_counts_partial(events: DataFrame) -> DataFrame:
+    """(user_id, n) count table for one micro-batch."""
+    return events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
 
 
 def stage(spark: SparkSession, sf_dir: str) -> str:
@@ -353,30 +337,15 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..matcache import scratch_dir
+    from ..streaming.fixtures import drain_partials
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_hh_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the summed counts are partitioning-invariant by
-    # mergeability, which HEAVY_HITTERS_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_user_counts(
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            counts_dir=os.path.join(work, "counts"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
+    commits = drain_partials(
+        spark, stage(spark, sf_dir), user_counts_partial,
+        scratch_dir("dbp_hh_work_"),
+    )
     per_user = (
-        spark.read.parquet(os.path.join(work, "counts"))
+        spark.read.parquet(commits)
         .groupBy("user_id")
         .agg(F.sum("n").alias("n_events"))
     )

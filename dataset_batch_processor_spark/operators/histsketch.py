@@ -20,14 +20,13 @@ mergeability and engine-portable determinism.
 Scale shape: the histogram build is a narrow map + a groupBy over at
 most (max-min)*BIN_SCALE bins with map-side combine; the quantile
 extraction is a window over the BIN TABLE (thousands of rows), never
-the data. ``accumulate_hist`` commits per-micro-batch partial
-histograms idempotently (overwrite-by-batch_id, the cms.py pattern)
-and the parity test pins streaming merge == one-pass batch.
+the data. ``events_hist_streaming`` commits per-micro-batch
+``hist_partial`` histograms idempotently (overwrite-by-batch_id,
+``streaming.fixtures.drain_partials``) and the parity test pins
+streaming merge == one-pass batch.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,23 +153,6 @@ def hist_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def accumulate_hist(events_stream: DataFrame, hist_dir: str,
-                    checkpoint_dir: str):
-    """foreachBatch histogram accumulation with idempotent per-batch
-    commits; merge with :func:`read_hist`."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(hist_dir, f"batch_id={batch_id}")
-        hist_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_hist(spark: SparkSession, hist_dir: str) -> DataFrame:
     return (
         spark.read.parquet(hist_dir)
@@ -208,27 +190,14 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 
 def _q_hist_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
+    from ..streaming.fixtures import drain_partials
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_hist_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the merged histogram is partitioning-invariant by
-    # mergeability, which HIST_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_hist(
-            spark.readStream.schema("value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            hist_dir=os.path.join(work, "hist"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
+    commits = drain_partials(
+        spark, stage(spark, sf_dir), hist_partial,
+        scratch_dir("dbp_hist_work_"),
+    )
     return (
-        read_hist(spark, os.path.join(work, "hist"))
+        read_hist(spark, commits)
         .select(
             F.col("bin").cast("bigint").alias("bin"),
             F.col("n").cast("bigint").alias("n"),

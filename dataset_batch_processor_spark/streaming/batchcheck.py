@@ -20,7 +20,6 @@ the answer invariant to how the input got micro-batched.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import uuid
@@ -30,36 +29,24 @@ from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.matcache import scratch_dir
-
-# Stateful streaming operators (agg / dedup / session-window / join)
-# allocate one state-store instance PER shuffle partition PER
-# operator, and AQE cannot coalesce them — so at fixture volume the
-# session default (32) is pure per-instance overhead (~2x the query
-# wall, measured on the stream-stream join; round 15 applies the same
-# sizing to the other stateful classes per VERDICT r14 next #7). A
-# production stream sizes this to throughput, not the session default.
-# Round 15b re-measured 8/4/3/2 across all five stateful twins: 4
-# dominates (join 5.8 -> 3.8 s, sessions 2.9 -> 2.2 s; 2-3 is inside
-# noise of 4 but loses parallelism headroom) — aligned with the
-# foreachBatch twins' drain sizing (fixtures.DRAIN_PARTITIONS, same
-# env story).
-STATE_PARTITIONS = os.environ.get(
-    "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"
-)
+from dataset_batch_processor_spark.streaming.fixtures import drain_sized
 
 
-@contextlib.contextmanager
-def _state_sized_session(spark: SparkSession):
-    """Scope shuffle.partitions=STATE_PARTITIONS around a streaming
-    query start/drain, restoring the session default on ANY exit so a
-    mid-construction error can't leak the tweak into the long-lived
-    session (the streaming_click_purchase_join discipline)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", STATE_PARTITIONS)
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+def _drain_to_memory(df: DataFrame, output_mode: str, name: str) -> None:
+    """Run the streaming ``df`` to completion (availableNow) into the
+    memory-sink table ``name``, under the drain's shuffle sizing
+    (fixtures.DRAIN_PARTITIONS: every stateful operator allocates one
+    state-store instance per shuffle partition, which AQE cannot
+    coalesce)."""
+    with drain_sized(df.sparkSession):
+        (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def _stage_file_once(spark: SparkSession, sf_dir: str, table: str) -> str:
@@ -82,22 +69,14 @@ def streaming_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_file_once(spark, sf_dir, "orders")
     schema = spark.read.parquet(path).schema
     name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = spark.readStream.schema(schema).parquet(stage)
-        agg = src.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    src = spark.readStream.schema(schema).parquet(stage)
+    agg = src.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
+        .cast("double")
+        .alias("total_price"),
+    )
+    _drain_to_memory(agg, "complete", name)
     return spark.sql(
         f"SELECT o_orderpriority, n_orders, total_price FROM {name} "
         "ORDER BY o_orderpriority"
@@ -133,35 +112,27 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     schema = spark.read.parquet(path).schema
     name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = catalog.normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
+    src = catalog.normalize_event_ts(
+        spark.readStream.schema(schema).parquet(stage)
+    )
+    agg = (
+        src.groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(25,6)"))
+            .cast("double")
+            .alias("sum_value"),
         )
-        agg = (
-            src.groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(25,6)"))
-                .cast("double")
-                .alias("sum_value"),
-            )
-            .select(
-                F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "hour"
-                ),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
+                "hour"
+            ),
+            "event_type",
+            "n_events",
+            "sum_value",
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    )
+    _drain_to_memory(agg, "complete", name)
     return spark.sql(
         f"SELECT hour, event_type, n_events, sum_value FROM {name} "
         "ORDER BY hour, event_type"
@@ -207,22 +178,14 @@ def streaming_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     schema = spark.read.parquet(path).schema
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = spark.readStream.schema(schema).parquet(stage)
-        agg = (
-            src.select("user_id", "event_type")
-            .dropDuplicates(["user_id", "event_type"])
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n_users"))
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    src = spark.readStream.schema(schema).parquet(stage)
+    agg = (
+        src.select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n_users"))
+    )
+    _drain_to_memory(agg, "complete", name)
     return spark.sql(
         f"SELECT event_type, n_users FROM {name} ORDER BY event_type"
     )
@@ -263,8 +226,8 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         prev_nanos = None
     schema = spark.read.parquet(path).schema
     # State-store instances scale with shuffle partitions x join sides
-    # (x2 here) — the query where the 8-partition sizing was measured
-    # (~2x the query wall at 32); see STATE_PARTITIONS.
+    # (x2 here) — the query where the drain sizing was first measured
+    # (~2x the query wall at 32); see fixtures.DRAIN_PARTITIONS.
 
     def side(event_type, ts_name, uid_name):
         src = catalog.normalize_event_ts(
@@ -281,27 +244,16 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
     name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
     try:
-        # EVERYTHING that can fail (plan building included) sits
-        # inside the scoped session so a mid-construction error can't
-        # leak partitions=8 into the long-lived session
-        with _state_sized_session(spark):
-            clicks = side("click", "click_ts", "user_id")
-            purchases = side("purchase", "p_ts", "p_user")
-            joined = clicks.join(
-                purchases,
-                F.expr(
-                    "user_id = p_user AND p_ts > click_ts "
-                    "AND p_ts <= click_ts + INTERVAL 1 HOUR"
-                ),
-            )
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        clicks = side("click", "click_ts", "user_id")
+        purchases = side("purchase", "p_ts", "p_user")
+        joined = clicks.join(
+            purchases,
+            F.expr(
+                "user_id = p_user AND p_ts > click_ts "
+                "AND p_ts <= click_ts + INTERVAL 1 HOUR"
+            ),
+        )
+        _drain_to_memory(joined, "append", name)
         # Materialize the per-user counts NOW (bounded: one row per
         # distinct user) so the memory-sink table and the nanosAsLong
         # override can be released before returning — the caller gets
@@ -370,35 +322,27 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     try:
         schema = spark.read.parquet(path).schema
-        with _state_sized_session(spark):
-            src = catalog.normalize_event_ts(
-                spark.readStream.schema(schema).parquet(stage)
+        src = catalog.normalize_event_ts(
+            spark.readStream.schema(schema).parquet(stage)
+        )
+        agg = (
+            src.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(25,6)"))
+                .cast("double")
+                .alias("sum_value"),
             )
-            agg = (
-                src.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
-                .agg(
-                    F.count("*").alias("n_events"),
-                    F.sum(F.col("value").cast("decimal(25,6)"))
-                    .cast("double")
-                    .alias("sum_value"),
-                )
-                .select(
-                    "user_id",
-                    F.unix_micros("session_window.start").alias(
-                        "session_start_us"
-                    ),
-                    "n_events",
-                    "sum_value",
-                )
+            .select(
+                "user_id",
+                F.unix_micros("session_window.start").alias(
+                    "session_start_us"
+                ),
+                "n_events",
+                "sum_value",
             )
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        )
+        _drain_to_memory(agg, "complete", name)
         # materialize off the memory sink so the view can be dropped
         # before returning (same hygiene as
         # streaming_click_purchase_join; staging is session-shared).

@@ -21,8 +21,6 @@ planted-docs-per-shard rows; commits are batch_id-keyed overwrites
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,23 +41,6 @@ def exposure_partial(batch_docs: DataFrame) -> DataFrame:
     batch_docs.createOrReplaceTempView("stream_canary_docs")
     return spark.sql(
         canary._sql("spark", _PARTIAL_TAIL, table="stream_canary_docs")
-    )
-
-
-def accumulate_exposure(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch exposure partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        exposure_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -96,18 +77,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_canary_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_cng_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_exposure(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_leak_card(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), exposure_partial,
+        scratch_dir("dbp_cng_work_"),
+    )
+    return read_leak_card(spark, commits)
 
 
 QUERIES = {"docs_stream_canary_card": _q_stream_canary_card}

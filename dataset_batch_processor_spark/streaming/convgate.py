@@ -22,8 +22,6 @@ is per-doc, so admission needs no memory).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,23 +35,6 @@ def validation_partial(batch_docs: DataFrame) -> DataFrame:
     spark = batch_docs.sparkSession
     batch_docs.createOrReplaceTempView("stream_conv_docs")
     return spark.sql(chatvalidate.validate_counts_sql("stream_conv_docs"))
-
-
-def accumulate_validation(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch validation partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        validation_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def read_validation(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -80,19 +61,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_conv_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_cvg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_validation(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_validation(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), validation_partial,
+        scratch_dir("dbp_cvg_work_"),
+    )
+    return read_validation(spark, commits)
 
 
 QUERIES = {"docs_stream_conv_validation": _q_stream_conv_validation}

@@ -25,8 +25,6 @@ cross-batch joins, no corpus-sized anything on the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,23 +48,6 @@ def drift_partial(batch_docs: DataFrame) -> DataFrame:
         )
         .groupBy("shard_id", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-
-
-def accumulate_drift(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch histogram partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        drift_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -145,18 +126,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_drift_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_drift(
-            spark.readStream.schema("doc_id long, n_chars long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_drift(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), drift_partial,
+        scratch_dir("dbp_drift_work_"),
+    )
+    return read_drift(spark, commits)
 
 
 STREAM_DRIFT_DUCK = f"""

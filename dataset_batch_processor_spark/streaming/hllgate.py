@@ -19,31 +19,12 @@ retry); no cross-batch state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
 from ..operators import hll
 from . import fixtures
-
-
-def accumulate_hll(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch register partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        hll.hll_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def read_hll_card(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -76,24 +57,15 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_hll_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_hlg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_hll(
-            spark.readStream.schema(
-                "doc_id long, text string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), hll.hll_partial,
+        scratch_dir("dbp_hlg_work_"),
+    )
     # the audit's exact side reads the fully-drained corpus
     catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "documents"
     )
-    return read_hll_card(spark, os.path.join(work, "commits"))
+    return read_hll_card(spark, commits)
 
 
 QUERIES = {"docs_stream_hll_card": _q_stream_hll_card}

@@ -60,20 +60,21 @@ from ..operators.dedup import lsh_bands_df, minhash_signatures_df
 from . import fixtures
 
 
-def incremental_lsh_pairs(
-    docs_stream: DataFrame, index_dir: str, pairs_dir: str,
-    checkpoint_dir: str, max_bucket_size: int | None = None,
-):
-    """Start the foreachBatch loop; returns the StreamingQuery.
-
-    ``docs_stream`` must carry (doc_id, text). Pairs land in
-    ``pairs_dir`` as (doc_a, doc_b) parquet; the bucket index
-    accumulates in ``index_dir``. ``max_bucket_size`` is the
-    streaming EMISSION cap (module docstring): buckets whose
-    accumulated size exceeds it stop yielding candidates."""
+def run_incremental_over_dir(
+    spark: SparkSession, staged_dir: str, work_dir: str,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Drain a staged directory of (doc_id, text) parquet files — one
+    micro-batch per file — and return the drained pairs DataFrame
+    (distinct). Pairs land in ``work_dir/pairs`` as (doc_a, doc_b)
+    parquet; the bucket index accumulates in ``work_dir/band_index``.
+    ``max_bucket_size`` is the streaming EMISSION cap (module
+    docstring): buckets whose accumulated size exceeds it stop
+    yielding candidates."""
+    index_dir = os.path.join(work_dir, "band_index")
+    pairs_dir = os.path.join(work_dir, "pairs")
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         all_bands = lsh_bands_df(minhash_signatures_df(batch)).persist()
         bands = all_bands
         try:
@@ -85,13 +86,20 @@ def incremental_lsh_pairs(
             # every new-vs-old pair, breaking the incremental == batch
             # invariant. A real read failure must propagate so the
             # micro-batch retries instead of committing an incomplete
-            # pair set.
+            # pair set. A replayed batch leaves its OWN prior index
+            # partition out of the probe and the read (the
+            # turndedup.process_turn_batch rule): it is not history,
+            # and the index overwrite below deletes its files while
+            # the pair job would still be scanning them.
+            own = f"batch_id={batch_id}"
             have_index = any(
-                e.name.startswith("batch_id=")
+                e.name.startswith("batch_id=") and e.name != own
                 for e in os.scandir(index_dir)
             ) if os.path.isdir(index_dir) else False
             if have_index:
-                idx = spark.read.parquet(index_dir)
+                idx = batch.sparkSession.read.parquet(index_dir).filter(
+                    F.col("batch_id") != batch_id
+                )
             if max_bucket_size is not None:
                 # emission cap: exclude saturated buckets from the
                 # CANDIDATE joins only — the index append below keeps
@@ -166,43 +174,14 @@ def incremental_lsh_pairs(
         finally:
             all_bands.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fixtures.drain(
+        spark, staged_dir, process_batch,
+        os.path.join(work_dir, "checkpoint"),
     )
-
-
-def run_incremental_over_dir(
-    spark: SparkSession, staged_dir: str, work_dir: str,
-    max_files_per_trigger: int = 1, schema=None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Drive ``incremental_lsh_pairs`` over a staged directory of
-    document parquet files — one micro-batch per file — and return
-    the drained pairs DataFrame (distinct)."""
-    if schema is None:
-        schema = spark.read.parquet(staged_dir).schema
-    with fixtures.drain_sized(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(staged_dir)
-            .select("doc_id", "text")
-        )
-        q = incremental_lsh_pairs(
-            stream,
-            index_dir=os.path.join(work_dir, "band_index"),
-            pairs_dir=os.path.join(work_dir, "pairs"),
-            checkpoint_dir=os.path.join(work_dir, "checkpoint"),
-            max_bucket_size=max_bucket_size,
-        )
-        q.awaitTermination()
     # partition discovery adds the batch_id dir key as a column;
     # project it away so the result schema is exactly (doc_a, doc_b)
     return (
-        spark.read.parquet(os.path.join(work_dir, "pairs"))
+        spark.read.parquet(pairs_dir)
         .select("doc_a", "doc_b")
         .distinct()
     )

@@ -21,8 +21,6 @@ replaces its own partition); no cross-batch state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,23 +41,6 @@ def margin_partial(batch_docs: DataFrame) -> DataFrame:
         "spark", preference._MARGIN_TAIL, 2, table="stream_pref_docs"
     )
     return spark.sql(sql)
-
-
-def accumulate_margins(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch margin histograms."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        margin_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def read_margins(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -90,19 +71,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_margin_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_pfg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_margins(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_margins(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), margin_partial,
+        scratch_dir("dbp_pfg_work_"),
+    )
+    return read_margins(spark, commits)
 
 
 QUERIES = {"docs_stream_margin_hist": _q_stream_margin_hist}

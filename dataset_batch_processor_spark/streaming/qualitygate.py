@@ -24,8 +24,6 @@ rows. Bounded state, no cross-batch joins.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,23 +63,6 @@ def admission_partial(batch_docs: DataFrame) -> DataFrame:
     )
 
 
-def accumulate_admission(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch admission partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        admission_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_admission(spark: SparkSession, commits_dir: str) -> DataFrame:
     """Merge the per-batch partials (exact: counts add)."""
     return (
@@ -115,21 +96,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_qg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_admission(
-            spark.readStream.schema(
-                "doc_id long, text string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_admission(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), admission_partial,
+        scratch_dir("dbp_qg_work_"),
+    )
+    return read_admission(spark, commits)
 
 
 _BLOCK_LIST = ", ".join(f"'{w}'" for w in webquality.BLOCKWORDS)

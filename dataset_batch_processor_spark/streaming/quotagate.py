@@ -29,7 +29,6 @@ to corrupt on retry).
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,23 +51,6 @@ def quota_partial(batch_docs: DataFrame) -> DataFrame:
     view = f"stream_quota_docs_{next(_VIEW_SEQ)}"
     batch_docs.createOrReplaceTempView(view)
     return spark.sql(curation.quota_bottomk_sql(view))
-
-
-def accumulate_quota(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch bottom-k partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        quota_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def read_quota(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -103,19 +85,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_qg2_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_quota(
-            spark.readStream.schema("doc_id long, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_quota(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), quota_partial,
+        scratch_dir("dbp_qg2_work_"),
+    )
+    return read_quota(spark, commits)
 
 
 QUERIES = {"docs_stream_quota_sample": _q_stream_quota_sample}

@@ -25,8 +25,6 @@ own partition); no cross-batch state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,23 +46,6 @@ def grade_partial(batch_docs: DataFrame) -> DataFrame:
     batch_docs.createOrReplaceTempView("stream_rlvr_docs")
     return spark.sql(
         rlvr._sql("spark", _PARTIAL_TAIL, table="stream_rlvr_docs")
-    )
-
-
-def accumulate_grades(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch grade histograms."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        grade_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -113,19 +94,11 @@ def stage(spark: SparkSession, sf_dir: str) -> str:
 def _q_stream_passk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..matcache import scratch_dir
 
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_rvg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_grades(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_passk(spark, os.path.join(work, "commits"))
+    commits = fixtures.drain_partials(
+        spark, stage(spark, sf_dir), grade_partial,
+        scratch_dir("dbp_rvg_work_"),
+    )
+    return read_passk(spark, commits)
 
 
 QUERIES = {"docs_stream_passk": _q_stream_passk}

@@ -147,47 +147,22 @@ def process_turn_batch(
         turns.unpersist()
 
 
-def incremental_turn_admission(
-    docs_stream: DataFrame, index_dir: str, admitted_dir: str,
-    checkpoint_dir: str,
-):
-    """foreachBatch loop; returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        process_turn_batch(batch, batch_id, index_dir, admitted_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def run_turn_admission_over_dir(
-    spark: SparkSession, staged_dir: str, work_dir: str,
-    max_files_per_trigger: int = 1, schema=None,
+    spark: SparkSession, staged_dir: str, work_dir: str
 ) -> DataFrame:
-    """Drive the admission loop over staged parquet and return the
-    ORDER-FREE gated view: one row per admitted digest."""
-    if schema is None:
-        schema = spark.read.parquet(staged_dir).schema
-    with fixtures.drain_sized(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(staged_dir)
-            .select("doc_id", "text")
-        )
-        q = incremental_turn_admission(
-            stream,
-            index_dir=os.path.join(work_dir, "digest_index"),
-            admitted_dir=os.path.join(work_dir, "admitted"),
-            checkpoint_dir=os.path.join(work_dir, "checkpoint"),
-        )
-        q.awaitTermination()
+    """Drain the admission loop over staged (doc_id, text) parquet and
+    return the ORDER-FREE gated view: one row per admitted digest."""
+    index_dir = os.path.join(work_dir, "digest_index")
+    admitted_dir = os.path.join(work_dir, "admitted")
+    fixtures.drain(
+        spark, staged_dir,
+        lambda batch, batch_id: process_turn_batch(
+            batch, batch_id, index_dir, admitted_dir
+        ),
+        os.path.join(work_dir, "checkpoint"),
+    )
     return (
-        spark.read.parquet(os.path.join(work_dir, "admitted"))
+        spark.read.parquet(admitted_dir)
         .select("digest", F.col("n_tokens").cast("int").alias("n_tokens"))
     )
 
