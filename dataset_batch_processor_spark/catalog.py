@@ -9,8 +9,6 @@ so the Spark engine and the DuckDB oracle compute them identically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,11 +42,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # beat 32 cores on the Arrow heavies. Call sites that know their
 # stage class pass ``rows`` (from the cached table count) so the fan
 # width is min(parallelism, rows / this floor); sites with dominant
-# per-row cost keep the unconditional full-width fan. Env-tunable for
-# production (rows/task should track per-row kernel cost).
-FANOUT_ROWS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_ROWS_PER_TASK", "256")
-)
+# per-row cost keep the unconditional full-width fan.
+FANOUT_ROWS_PER_TASK = 256
 
 _ROWS_CACHE: dict[tuple[str, str], int] = {}
 

@@ -1,24 +1,27 @@
 """Shared multimodal query plumbing: the Arrow-batch probe and the
-id fan-out helper every codec-family query module builds on (split
-out of multimodal/queries.py in round 10 — VERDICT r9 next #5, the
-same thematic regroup the relational strata got in round 9).
+one per-doc kernel every synthetic codec fixture query runs through
+(split out of multimodal/queries.py in round 10).
 
 ``mm_decode_meta`` proves the mapInPandas plumbing itself against a
 pure-SQL oracle: the "decoded" dimensions are pure functions of the
 byte length, so any dropped/reordered/duplicated Arrow row breaks the
-hash. ``_fanout`` is the doc_id repartition ahead of Python codec
-kernels — the whole perf fix for kernel-bound families (13.2s -> 1.6s
-at sf0.1), pinned in tests/test_plan_shape.py.
+hash. ``doc_kernel`` is the shape of every fixture query in
+q{image,raw,audio,scrub,patch,video}.py: load ``documents``, keep the
+ids a filter selects, fan them out with ``_fanout`` and call one row
+function per id inside a single mapInPandas. The fan is the doc_id
+repartition ahead of Python codec kernels — the whole perf fix for
+kernel-bound families (13.2s -> 1.6s at sf0.1), pinned in
+tests/test_plan_shape.py — so its width is decided here and nowhere
+else.
 """
 from __future__ import annotations
 
-import os
-
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import catalog
 
@@ -90,13 +93,12 @@ FROM chars
 # full-width fan), while the vectorized-numpy kernels (audio
 # features/resample/VAD, frame sampling, scene cuts, packed-raw and
 # depth roundtrips) lose 1.3-2.6x to sub-200-row task fragmentation
-# and want >= this many rows per task. Light call sites pass ``rows``
-# (the cached documents count); at production row counts the cap
-# saturates at full parallelism, so the split is bench-visible only
-# where the input is small.
-LIGHT_ROWS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_MM_LIGHT_ROWS_PER_TASK", "512")
-)
+# and want >= this many rows per task. Light kernels pass
+# ``light=True`` to doc_kernel (sized from the cached documents
+# count); at production row counts the cap saturates at full
+# parallelism, so the split is bench-visible only where the input is
+# small.
+LIGHT_ROWS_PER_TASK = 512
 
 
 def _fanout(
@@ -118,6 +120,44 @@ def _fanout(
     if rows is not None:
         par = max(1, min(par, rows // LIGHT_ROWS_PER_TASK))
     return docs.select("doc_id").repartition(par)
+
+
+def doc_kernel(
+    spark: SparkSession,
+    sf_dir: str,
+    row: Callable[[int], tuple],
+    schema: str,
+    *,
+    where: Column | None = None,
+    light: bool = False,
+    many: bool = False,
+    docs: DataFrame | None = None,
+) -> DataFrame:
+    """Run ``row(doc_id)`` for every ``documents`` id ``where`` keeps.
+
+    ``row`` returns one tuple in ``schema`` column order (with
+    ``many``, a list of such tuples: zero or more rows per doc). The
+    ids are fanned out with ``_fanout`` first; ``light`` caps the fan
+    at the UNFILTERED documents count / LIGHT_ROWS_PER_TASK. Column
+    names are parsed from ``schema`` once, here on the driver. A
+    caller that already loaded ``documents`` passes it as ``docs``:
+    every load runs one parquet schema-inference job (~0.1 s)."""
+    if docs is None:
+        docs = catalog.load_table(spark, sf_dir, "documents")
+    if where is not None:
+        docs = docs.filter(where)
+    rows = catalog.table_rows(spark, sf_dir, "documents") if light else None
+    columns = StructType.fromDDL(schema).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            emit = out.extend if many else out.append
+            for doc_id in pdf["doc_id"]:
+                emit(row(int(doc_id)))
+            yield pd.DataFrame(out, columns=columns)
+
+    return _fanout(spark, docs, rows).mapInPandas(run, schema=schema)
 
 
 QUERIES = {
