@@ -18,10 +18,9 @@ Toy containers:
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -32,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .binary import per_record
 
 PCM_MAGIC = b"PCM1"
 VID_MAGIC = b"VID1"
@@ -417,36 +418,23 @@ def audio_features(df: DataFrame) -> DataFrame:
     """Decode + summary features (duration, RMS, peak) — the audio
     analogue of image header metadata. Errors quarantined (F7)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "sample_rate": None, "n_samples": None,
-                       "duration_s": None, "rms": None, "peak": None, "error": None}
-                try:
-                    samples, rate = AUDIO_CODECS[row.fmt.lower()](bytes(row.content))
-                    x = samples.astype(np.float64)
-                    rec.update(
-                        sample_rate=int(rate),
-                        n_samples=int(len(samples)),
-                        duration_s=float(len(samples) / rate),
-                        rms=float(np.sqrt(np.mean(x * x))) if len(x) else 0.0,
-                        # abs in the WIDE dtype: np.abs(int16 -32768)
-                        # wraps back to -32768, under-reporting the
-                        # peak of full-scale negative samples
-                        peak=int(np.max(np.abs(samples.astype(np.int64))))
-                        if len(samples) else 0,
-                    )
-                except Exception as e:
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
+    def row(r) -> dict:
+        samples, rate = AUDIO_CODECS[r.fmt.lower()](bytes(r.content))
+        x = samples.astype(np.float64)
+        return {
+            "sample_rate": int(rate),
+            "n_samples": int(len(samples)),
+            "duration_s": float(len(samples) / rate),
+            "rms": float(np.sqrt(np.mean(x * x))) if len(x) else 0.0,
+            # abs in the WIDE dtype: np.abs(int16 -32768) wraps back to
+            # -32768, under-reporting the peak of full-scale negative
+            # samples
+            "peak": int(np.max(np.abs(samples.astype(np.int64))))
+            if len(samples) else 0,
+        }
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return per_record(df.select("id", "fmt", "content"),
+                      AUDIO_FEATURES_SCHEMA, row)
 
 
 # ----------------------------------------------------------- frame sampling
@@ -473,33 +461,16 @@ def sample_frames(df: DataFrame, every_n: int = 5) -> DataFrame:
     """
     from .binary import encode_rawrgb
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    frames, fps = VIDEO_CODECS[row.fmt.lower()](bytes(row.content))
-                    for idx in range(0, frames.shape[0], every_n):
-                        out.append(
-                            {"id": str(row.id), "frame_idx": idx,
-                             "ts_s": float(idx / fps),
-                             "content": encode_rawrgb(
-                                 np.ascontiguousarray(frames[idx])
-                             ),
-                             "error": None}
-                        )
-                except Exception as e:
-                    out.append(
-                        {"id": str(row.id), "frame_idx": None, "ts_s": None,
-                         "content": None, "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-            )
+    def rows(r) -> list[dict]:
+        frames, fps = VIDEO_CODECS[r.fmt.lower()](bytes(r.content))
+        return [
+            {"frame_idx": idx, "ts_s": float(idx / fps),
+             "content": encode_rawrgb(np.ascontiguousarray(frames[idx]))}
+            for idx in range(0, frames.shape[0], every_n)
+        ]
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return per_record(df.select("id", "fmt", "content"),
+                      FRAME_SAMPLE_SCHEMA, rows, many=True)
 
 
 # ------------------------------------------------------- VAD segmentation
@@ -521,53 +492,32 @@ def vad_segments(df: DataFrame, frame: int = VAD_FRAME,
     sub-frame tail is dropped, matching the SQL oracle. Decode
     failures quarantine (F7)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    samples, rate = AUDIO_CODECS[row.fmt.lower()](
-                        bytes(row.content)
-                    )
-                    n_frames = len(samples) // frame
-                    x = samples[: n_frames * frame].astype(np.int64)
-                    energy = (x * x).reshape(n_frames, frame).sum(axis=1)
-                    active = energy > energy_thresh
-                    # islands: segment id = cumsum of run starts
-                    starts = np.diff(
-                        np.concatenate(([0], active.view(np.int8)))
-                    ) == 1
-                    seg_of = np.cumsum(starts) - 1
-                    for seg in range(seg_of[active].max() + 1 if active.any() else 0):
-                        idx = np.nonzero(active & (seg_of == seg))[0]
-                        out.append(
-                            {
-                                "id": str(row.id),
-                                "seg_idx": int(seg),
-                                "start_frame": int(idx[0]),
-                                "end_frame": int(idx[-1]),
-                                "n_frames": int(len(idx)),
-                                "start_s": float(idx[0] * frame / rate),
-                                "error": None,
-                            }
-                        )
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out.append(
-                        {"id": str(row.id), "seg_idx": None,
-                         "start_frame": None, "end_frame": None,
-                         "n_frames": None, "start_s": None,
-                         "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "seg_idx", "start_frame", "end_frame",
-                         "n_frames", "start_s", "error"],
-            )
+    def rows(r) -> list[dict]:
+        samples, rate = AUDIO_CODECS[r.fmt.lower()](bytes(r.content))
+        n_frames = len(samples) // frame
+        x = samples[: n_frames * frame].astype(np.int64)
+        energy = (x * x).reshape(n_frames, frame).sum(axis=1)
+        active = energy > energy_thresh
+        # islands: segment id = cumsum of run starts
+        starts = np.diff(np.concatenate(([0], active.view(np.int8)))) == 1
+        seg_of = np.cumsum(starts) - 1
+        out = []
+        for seg in range(seg_of[active].max() + 1 if active.any() else 0):
+            idx = np.nonzero(active & (seg_of == seg))[0]
+            out.append({
+                "seg_idx": int(seg),
+                "start_frame": int(idx[0]),
+                "end_frame": int(idx[-1]),
+                "n_frames": int(len(idx)),
+                "start_s": float(idx[0] * frame / rate),
+            })
+        return out
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run,
-        schema=("id string, seg_idx int, start_frame int, end_frame int, "
-                "n_frames int, start_s double, error string"),
+    return per_record(
+        df.select("id", "fmt", "content"),
+        ("id string, seg_idx int, start_frame int, end_frame int, "
+         "n_frames int, start_s double, error string"),
+        rows, many=True,
     )
 
 
@@ -640,47 +590,29 @@ def spectral_features(df: DataFrame, frame: int = SPEC_FRAME) -> DataFrame:
             f"oracle's literal copy) to change the analysis window"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    samples, _rate = AUDIO_CODECS[row.fmt.lower()](
-                        bytes(row.content)
-                    )
-                    n_frames = len(samples) // frame
-                    x = samples[: n_frames * frame].astype(np.int64)
-                    x = x.reshape(n_frames, frame)
-                    re = _tdiv(x @ SPEC_COS.T, frame)   # (n_frames, 8)
-                    im = _tdiv(x @ SPEC_SIN.T, frame)
-                    power = re * re + im * im
-                    half = SPEC_BINS // 2
-                    dom = np.argmax(power, axis=1) + 1  # first max = low k
-                    p_low = power[:, :half].sum(axis=1)
-                    p_high = power[:, half:].sum(axis=1)
-                    for f in range(n_frames):
-                        out.append(
-                            {"id": str(row.id), "frame_idx": int(f),
-                             "dom_bin": int(dom[f]),
-                             "p_low": int(p_low[f]),
-                             "p_high": int(p_high[f]), "error": None}
-                        )
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out.append(
-                        {"id": str(row.id), "frame_idx": None,
-                         "dom_bin": None, "p_low": None, "p_high": None,
-                         "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "frame_idx", "dom_bin",
-                         "p_low", "p_high", "error"],
-            )
+    def rows(r) -> list[dict]:
+        samples, _rate = AUDIO_CODECS[r.fmt.lower()](bytes(r.content))
+        n_frames = len(samples) // frame
+        x = samples[: n_frames * frame].astype(np.int64)
+        x = x.reshape(n_frames, frame)
+        re = _tdiv(x @ SPEC_COS.T, frame)   # (n_frames, 8)
+        im = _tdiv(x @ SPEC_SIN.T, frame)
+        power = re * re + im * im
+        half = SPEC_BINS // 2
+        dom = np.argmax(power, axis=1) + 1  # first max = low k
+        p_low = power[:, :half].sum(axis=1)
+        p_high = power[:, half:].sum(axis=1)
+        return [
+            {"frame_idx": int(f), "dom_bin": int(dom[f]),
+             "p_low": int(p_low[f]), "p_high": int(p_high[f])}
+            for f in range(n_frames)
+        ]
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run,
-        schema=("id string, frame_idx int, dom_bin int, "
-                "p_low long, p_high long, error string"),
+    return per_record(
+        df.select("id", "fmt", "content"),
+        ("id string, frame_idx int, dom_bin int, "
+         "p_low long, p_high long, error string"),
+        rows, many=True,
     )
 
 
@@ -725,37 +657,21 @@ def scene_changes(df: DataFrame, energy_thresh: int) -> DataFrame:
     crosses ``energy_thresh``. 1 video row -> n_frames-1 boundary
     rows. Decode failures quarantine (F7)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    frames, _fps = decode_rawvid(bytes(row.content))
-                    x = frames.astype(np.int64).reshape(len(frames), -1)
-                    deltas = ((x[1:] - x[:-1]) ** 2).sum(axis=1)
-                    for f, e in enumerate(deltas):
-                        out.append(
-                            {"id": str(row.id), "frame_idx": int(f),
-                             "delta_energy": int(e),
-                             "is_cut": bool(e > energy_thresh),
-                             "error": None}
-                        )
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out.append(
-                        {"id": str(row.id), "frame_idx": None,
-                         "delta_energy": None, "is_cut": None,
-                         "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "frame_idx", "delta_energy", "is_cut",
-                         "error"],
-            )
+    def rows(r) -> list[dict]:
+        frames, _fps = decode_rawvid(bytes(r.content))
+        x = frames.astype(np.int64).reshape(len(frames), -1)
+        deltas = ((x[1:] - x[:-1]) ** 2).sum(axis=1)
+        return [
+            {"frame_idx": int(f), "delta_energy": int(e),
+             "is_cut": bool(e > energy_thresh)}
+            for f, e in enumerate(deltas)
+        ]
 
-    return df.select("id", "content").mapInPandas(
-        run,
-        schema=("id string, frame_idx int, delta_energy long, "
-                "is_cut boolean, error string"),
+    return per_record(
+        df.select("id", "content"),
+        ("id string, frame_idx int, delta_energy long, "
+         "is_cut boolean, error string"),
+        rows, many=True,
     )
 
 
@@ -768,42 +684,20 @@ def normalize_peak(df: DataFrame) -> DataFrame:
     gate — is engine-deterministic. Silent input (peak 0) passes
     through unchanged. Decode failures quarantine (F7)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    samples, rate = AUDIO_CODECS[row.fmt.lower()](
-                        bytes(row.content)
-                    )
-                    x = samples.astype(np.int64)
-                    peak = int(np.abs(x).max()) if len(x) else 0
-                    y = _tdiv(x * 32767, peak) if peak else x
-                    out.append(
-                        {"id": str(row.id),
-                         "n_samples": int(len(x)),
-                         "peak_before": peak,
-                         "peak_after": int(np.abs(y).max()) if len(y) else 0,
-                         "sample_sum": int(y.sum()),
-                         "error": None}
-                    )
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out.append(
-                        {"id": str(row.id), "n_samples": None,
-                         "peak_before": None, "peak_after": None,
-                         "sample_sum": None,
-                         "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "n_samples", "peak_before", "peak_after",
-                         "sample_sum", "error"],
-            )
+    def row(r) -> dict:
+        samples, _rate = AUDIO_CODECS[r.fmt.lower()](bytes(r.content))
+        x = samples.astype(np.int64)
+        peak = int(np.abs(x).max()) if len(x) else 0
+        y = _tdiv(x * 32767, peak) if peak else x
+        return {"n_samples": int(len(x)), "peak_before": peak,
+                "peak_after": int(np.abs(y).max()) if len(y) else 0,
+                "sample_sum": int(y.sum())}
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run,
-        schema=("id string, n_samples int, peak_before int, "
-                "peak_after int, sample_sum long, error string"),
+    return per_record(
+        df.select("id", "fmt", "content"),
+        ("id string, n_samples int, peak_before int, "
+         "peak_after int, sample_sum long, error string"),
+        row,
     )
 
 
@@ -820,51 +714,27 @@ def resample_linear(df: DataFrame, p: int = 3, q: int = 2) -> DataFrame:
     if p <= 0 or q <= 0:
         raise ValueError("resample ratio must be positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    samples, rate = AUDIO_CODECS[row.fmt.lower()](
-                        bytes(row.content)
-                    )
-                    x = samples.astype(np.int64)
-                    n = len(x)
-                    if n < 2:
-                        raise ValueError("resample needs >= 2 samples")
-                    n_out = ((n - 1) * p) // q + 1
-                    t = np.arange(n_out, dtype=np.int64) * q
-                    k = t // p
-                    r = t % p
-                    xk = x[k]
-                    # k+1 is only touched where r > 0 (there k+1 <= n-1)
-                    xk1 = x[np.minimum(k + 1, n - 1)]
-                    y = xk + _tdiv((xk1 - xk) * r, p)
-                    w = np.arange(1, n_out + 1, dtype=np.int64)
-                    out.append(
-                        {"id": str(row.id),
-                         "n_in": n,
-                         "n_out": int(n_out),
-                         "rate_out": rate * p // q,
-                         "out_sum": int(y.sum()),
-                         "out_wsum": int((y * w).sum()),
-                         "error": None}
-                    )
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out.append(
-                        {"id": str(row.id), "n_in": None, "n_out": None,
-                         "rate_out": None, "out_sum": None,
-                         "out_wsum": None,
-                         "error": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "n_in", "n_out", "rate_out", "out_sum",
-                         "out_wsum", "error"],
-            )
+    def row(r) -> dict:
+        samples, rate = AUDIO_CODECS[r.fmt.lower()](bytes(r.content))
+        x = samples.astype(np.int64)
+        n = len(x)
+        if n < 2:
+            raise ValueError("resample needs >= 2 samples")
+        n_out = ((n - 1) * p) // q + 1
+        t = np.arange(n_out, dtype=np.int64) * q
+        k = t // p
+        rem = t % p
+        xk = x[k]
+        # k+1 is only touched where rem > 0 (there k+1 <= n-1)
+        xk1 = x[np.minimum(k + 1, n - 1)]
+        y = xk + _tdiv((xk1 - xk) * rem, p)
+        w = np.arange(1, n_out + 1, dtype=np.int64)
+        return {"n_in": n, "n_out": int(n_out), "rate_out": rate * p // q,
+                "out_sum": int(y.sum()), "out_wsum": int((y * w).sum())}
 
-    return df.select("id", "fmt", "content").mapInPandas(
-        run,
-        schema=("id string, n_in int, n_out int, rate_out int, "
-                "out_sum long, out_wsum long, error string"),
+    return per_record(
+        df.select("id", "fmt", "content"),
+        ("id string, n_in int, n_out int, rate_out int, "
+         "out_sum long, out_wsum long, error string"),
+        row,
     )

@@ -1,10 +1,15 @@
 """Multimodal binary-column plumbing — decode / transform kernels.
 
 Design: image/audio/video payloads are opaque ``binary`` columns with
-typed metadata columns alongside. Every kernel is an Arrow-batched
-``mapInPandas`` transformation with an explicit output schema, so the
-Spark-side contract (schema, batch shape, partitioning) is real and
-tested even where the actual codec is stubbed.
+typed metadata columns alongside. Every per-record kernel is a row
+function run through ``per_record`` (Spark plumbing section): one
+Arrow-batched ``mapInPandas`` with an explicit output schema, in which
+a record that raises becomes one row with an ``error`` column (F7
+quarantine) instead of failing the batch. The image kernels here,
+the audio/video kernels in av.py, the dHash/pHash band kernels and
+the header-metadata source all share it, so the Spark-side contract
+(schema, batch shape, partitioning, quarantine) is real and tested
+even where the actual codec is stubbed.
 
 STUBS vs real: this container has numpy but no image codec libraries
 (PIL/imageio/pillow-heif), so *decode* goes through a pluggable codec
@@ -46,10 +51,12 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Callable, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -246,6 +253,48 @@ def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 # ------------------------------------------------------- Spark plumbing
 
+
+def per_record(
+    df: DataFrame,
+    schema: StructType | str,
+    fn: Callable[[Any], Any],
+    *,
+    head: Callable[[Any], dict] = lambda r: {"id": str(r.id)},
+    many: bool = False,
+) -> DataFrame:
+    """The F7 quarantine kernel: one ``mapInPandas`` that calls
+    ``fn(row)`` for every row of ``df`` (a pandas itertuples record).
+
+    Each output row is every ``schema`` column set to None, then
+    ``head(row)``, then the dict ``fn(row)`` returns; with ``many``,
+    ``fn`` returns a list of such dicts (zero or more rows). An
+    exception in ``fn`` gives exactly one row instead: the nulls,
+    ``head(row)`` and ``error`` = ``"<ExcType>: <message>"``. A record
+    yields either its rows or one error row, never a failed batch
+    (``head`` runs outside the quarantine: it only reads the input
+    row). Column names are parsed from ``schema`` once, here on the
+    driver."""
+    columns = (StructType.fromDDL(schema) if isinstance(schema, str)
+               else schema).names
+    nulls = dict.fromkeys(columns)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[dict] = []
+            for r in pdf.itertuples(index=False):
+                base = nulls | head(r)
+                try:
+                    if many:
+                        out.extend([base | rec for rec in fn(r)])
+                    else:
+                        out.append(base | fn(r))
+                except Exception as e:
+                    out.append(base | {"error": f"{type(e).__name__}: {e}"})
+            yield pd.DataFrame(out, columns=columns)
+
+    return df.mapInPandas(run, schema=schema)
+
+
 DECODE_META_SCHEMA = StructType(
     [
         StructField("id", StringType()),
@@ -264,22 +313,13 @@ def decode_metadata(binary_df: DataFrame, id_col: str = "id",
     metadata. Errors (including NotImplementedError from stub codecs)
     are captured per row (F7 quarantine semantics), never fatal."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, fmt, content in zip(pdf[id_col], pdf[fmt_col], pdf[content_col]):
-                row = {"id": str(rid), "fmt": fmt, "width": None, "height": None,
-                       "n_bytes": len(content), "error": None}
-                try:
-                    arr = decode_any(fmt, bytes(content))
-                    row["height"], row["width"] = int(arr.shape[0]), int(arr.shape[1])
-                except Exception as e:
-                    row["error"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in DECODE_META_SCHEMA.fields])
+    def row(r) -> dict:
+        arr = decode_any(r[1], bytes(r[2]))
+        return {"width": int(arr.shape[1]), "height": int(arr.shape[0])}
 
-    return binary_df.select(id_col, fmt_col, content_col).mapInPandas(
-        run, schema=DECODE_META_SCHEMA
+    return per_record(
+        binary_df.select(id_col, fmt_col, content_col), DECODE_META_SCHEMA,
+        row, head=lambda r: {"id": str(r[0]), "fmt": r[1], "n_bytes": len(r[2])},
     )
 
 
@@ -297,62 +337,43 @@ TILE_PIXELS_SCHEMA = StructType(
 
 
 def materialize_tiles(tiles_with_content: DataFrame, tile_size: int,
-                      pad_option: str = "None",
-                      spread_skew: bool = True) -> DataFrame:
+                      pad_option: str = "None") -> DataFrame:
     """Stage (b) of the tiling operator: actually crop (and pad) the
     pixel tiles that operators/tiling.py computed geometry for.
 
     Input columns: id, content, fmt, i, j, box_left/top/right/bottom.
-    Skew: by default the input is repartitioned on (id, j) BEFORE the
-    decode kernel, so one giant image's tile rows spread across tasks
-    instead of pinning the task that read the file (plan-asserted in
-    tests/test_png.py). ``spread_skew=False`` opts out when the caller
-    already co-partitioned (e.g. reading a bucketed tile table).
+    Skew: the input is repartitioned on (id, j) BEFORE the decode
+    kernel, so one giant image's tile rows spread across tasks instead
+    of pinning the task that read the file (plan-asserted in
+    tests/test_png.py).
     """
-    if spread_skew:
-        from pyspark.sql import functions as F
+    # Tile rows of one image share ONE decode (the per-row decode
+    # re-decoded the source image once per tile); capped so a task
+    # over many large images cannot hold every decoded array at once.
+    dec: dict = {}
 
-        tiles_with_content = tiles_with_content.repartition(
-            F.col("id"), F.col("j")
-        )
+    def row(r) -> dict:
+        key = (r.id, r.fmt)
+        arr = dec.get(key)
+        if arr is None:
+            arr = decode_any(r.fmt, bytes(r.content))
+            if len(dec) >= 64:
+                dec.clear()
+            dec[key] = arr
+        t = crop(arr, r.box_left, r.box_top, r.box_right, r.box_bottom)
+        if pad_option == "Extend Edges":
+            t = pad_extend_edges(t, tile_size)
+        elif pad_option == "Pad to Square":
+            t = pad_to_square(t, tile_size)
+        t = np.ascontiguousarray(t)
+        return {"tile_w": int(t.shape[1]), "tile_h": int(t.shape[0]),
+                "content": encode_rawrgb(t)}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            # round 15 (guide §1.2 per-task work): tile rows of one
-            # image that land in the same Arrow batch share ONE
-            # decode — the per-row decode_any re-decoded the source
-            # image once per tile. Batch-scoped memo, cleared between
-            # batches; capped so a batch of many large images cannot
-            # hold every decoded array at once.
-            dec: dict = {}
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "i": int(row.i), "j": int(row.j),
-                       "tile_w": None, "tile_h": None, "content": None,
-                       "error": None}
-                try:
-                    key = (row.id, row.fmt)
-                    arr = dec.get(key)
-                    if arr is None:
-                        arr = decode_any(row.fmt, bytes(row.content))
-                        if len(dec) >= 64:
-                            dec.clear()
-                        dec[key] = arr
-                    t = crop(arr, row.box_left, row.box_top,
-                             row.box_right, row.box_bottom)
-                    if pad_option == "Extend Edges":
-                        t = pad_extend_edges(t, tile_size)
-                    elif pad_option == "Pad to Square":
-                        t = pad_to_square(t, tile_size)
-                    t = np.ascontiguousarray(t)
-                    rec["tile_h"], rec["tile_w"] = int(t.shape[0]), int(t.shape[1])
-                    rec["content"] = encode_rawrgb(t)
-                except Exception as e:
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_PIXELS_SCHEMA.fields])
-
-    return tiles_with_content.mapInPandas(run, schema=TILE_PIXELS_SCHEMA)
+    return per_record(
+        tiles_with_content.repartition(F.col("id"), F.col("j")),
+        TILE_PIXELS_SCHEMA, row,
+        head=lambda r: {"id": str(r.id), "i": int(r.i), "j": int(r.j)},
+    )
 
 
 # ----------------------------------------------------------- conversion
@@ -395,27 +416,19 @@ def convert_batch(binary_df: DataFrame, target_fmt: str) -> DataFrame:
     register_encoder; the plumbing below is identical either way."""
     tf = target_fmt.lower()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "src_fmt": row.fmt, "dst_fmt": tf,
-                       "width": None, "height": None, "content": None,
-                       "error": None}
-                try:
-                    arr = decode_any(row.fmt, bytes(row.content))
-                    if tf not in ENCODERS:
-                        raise NotImplementedError(
-                            f"encoder '{tf}' not registered in this environment"
-                        )
-                    rec["height"], rec["width"] = int(arr.shape[0]), int(arr.shape[1])
-                    rec["content"] = ENCODERS[tf](np.ascontiguousarray(arr))
-                except Exception as e:
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in CONVERT_SCHEMA.fields])
+    def row(r) -> dict:
+        arr = decode_any(r.fmt, bytes(r.content))
+        if tf not in ENCODERS:
+            raise NotImplementedError(
+                f"encoder '{tf}' not registered in this environment"
+            )
+        return {"width": int(arr.shape[1]), "height": int(arr.shape[0]),
+                "content": ENCODERS[tf](np.ascontiguousarray(arr))}
 
-    return binary_df.mapInPandas(run, schema=CONVERT_SCHEMA)
+    return per_record(
+        binary_df, CONVERT_SCHEMA, row,
+        head=lambda r: {"id": str(r.id), "src_fmt": r.fmt, "dst_fmt": tf},
+    )
 
 
 def patchify_rgb(arr: np.ndarray, patch: int) -> np.ndarray:

@@ -363,33 +363,14 @@ def phash_bands(df: DataFrame) -> DataFrame:
     """pHash band signature for real binary image columns
     (id, fmt, content); decode failures quarantine (F7) with band
     columns NULL — same contract as imagedup.dhash_bands."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from ..multimodal import binary as mmbin
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "b0": None, "b1": None,
-                       "b2": None, "b3": None, "error": None}
-                try:
-                    arr = mmbin.decode_any(
-                        row.fmt.lower(), bytes(row.content)
-                    )
-                    b0, b1, b2, b3 = phash_hash_array(arr)
-                    rec.update(b0=b0, b1=b1, b2=b2, b3=b3)
-                except Exception as exc:  # noqa: BLE001 — F7 quarantine
-                    rec["error"] = f"{type(exc).__name__}: {exc}"
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=["id", "b0", "b1", "b2", "b3", "error"]
-            )
+    def row(r) -> dict:
+        arr = mmbin.decode_any(r.fmt.lower(), bytes(r.content))
+        return dict(zip(("b0", "b1", "b2", "b3"), phash_hash_array(arr)))
 
-    return df.mapInPandas(
-        run, schema="id string, b0 int, b1 int, b2 int, b3 int, error string"
+    return mmbin.per_record(
+        df, "id string, b0 int, b1 int, b2 int, b3 int, error string", row
     )
 
 

@@ -78,6 +78,15 @@ def prepare_images(
     )
 
 
+def _ok_failed(written: DataFrame) -> tuple[int, int]:
+    """(rows with a null ``error``, rows with one) in one scan."""
+    err = F.col("error")
+    row = written.agg(
+        F.count(F.when(err.isNull(), 1)), F.count(err)
+    ).first()
+    return int(row[0]), int(row[1])
+
+
 # -------------------------------------------------------------- tiling
 
 def tile_folder(
@@ -99,8 +108,9 @@ def tile_folder(
     skip_tiles.py:41-48) — missing sidecars yield null captions.
 
     Shuffle budget: ONE repartition before the pixel UDF, keyed
-    (path, j) so a giant image's tile rows spread across tasks (the
-    skew mitigation from SURVEY §4.2); geometry itself is narrow.
+    (path, j) inside ``materialize_tiles`` so a giant image's tile rows
+    spread across tasks (the skew mitigation from SURVEY §4.2);
+    geometry itself is narrow.
     """
     scanned = img_src.scan_image_folder(spark, in_dir)
     meta = img_src.valid_images(img_src.build_images_meta(scanned))
@@ -132,13 +142,9 @@ def tile_folder(
         "box_top",
         "box_right",
         "box_bottom",
-        "tile_name",
-        *(["caption"] if has_caption else []),
     )
     tiles = mm.materialize_tiles(
-        with_content.repartition(F.col("id"), F.col("j")),
-        tile_size=spec.tile_size,
-        pad_option=spec.pad_option,
+        with_content, tile_size=spec.tile_size, pad_option=spec.pad_option
     )
     named = tiles.join(
         geom.select(
@@ -149,8 +155,7 @@ def tile_folder(
     )
     named.write.mode("errorifexists").parquet(f"{out_dir}/tiles")
     written = spark.read.parquet(f"{out_dir}/tiles")
-    n_tiles = written.filter(F.col("error").isNull()).count()
-    n_failed = written.filter(F.col("error").isNotNull()).count()
+    n_tiles, n_failed = _ok_failed(written)
     metrics = {"tiles": n_tiles, "failed": n_failed}
     if export_sidecars and has_caption:
         metrics["sidecars"] = sinks.export_sidecar_files(
@@ -182,11 +187,9 @@ def convert_images(
     decoded = mm.convert_batch(src, target_fmt)
     decoded.write.mode("errorifexists").parquet(f"{out_dir}/converted")
     written = spark.read.parquet(f"{out_dir}/converted")
+    n_converted, n_failed = _ok_failed(written)
     return RunResult(
-        metrics={
-            "converted": written.filter(F.col("error").isNull()).count(),
-            "failed": written.filter(F.col("error").isNotNull()).count(),
-        },
+        metrics={"converted": n_converted, "failed": n_failed},
         output=written,
     )
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -162,39 +161,23 @@ def build_images_meta(scanned: DataFrame) -> DataFrame:
     filter_crop.py:64-65) turned into a quarantine-able column
     (filter on ``error IS NOT NULL`` for the quarantine table).
     """
+    from ..multimodal.binary import per_record
 
-    def parse_batch(batches):
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                base = path.rsplit("/", 1)[-1]
-                stem, _, ext = base.rpartition(".")
-                row = {
-                    "path": path,
-                    "basename": stem or base,
-                    "ext": ext.lower(),
-                    "width": None,
-                    "height": None,
-                    "error": None,
-                }
-                try:
-                    dims = None
-                    for parser in _HEADER_PARSERS:
-                        dims = parser(bytes(content))
-                        if dims:
-                            break
-                    if dims:
-                        row["width"], row["height"] = dims
-                    else:
-                        row["error"] = "unsupported or corrupt header"
-                except Exception as e:  # corrupt file: quarantine, don't abort
-                    row["error"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in _META_SCHEMA.fields])
+    def head(r) -> dict:
+        base = r.path.rsplit("/", 1)[-1]
+        stem, _, ext = base.rpartition(".")
+        return {"path": r.path, "basename": stem or base, "ext": ext.lower()}
 
-    return scanned.select("path", "content").mapInPandas(
-        parse_batch, schema=_META_SCHEMA
-    )
+    def row(r) -> dict:
+        content = bytes(r.content)
+        for parser in _HEADER_PARSERS:
+            dims = parser(content)
+            if dims:
+                return {"width": dims[0], "height": dims[1]}
+        return {"error": "unsupported or corrupt header"}
+
+    return per_record(scanned.select("path", "content"), _META_SCHEMA, row,
+                      head=head)
 
 
 def quarantine(meta: DataFrame) -> DataFrame:

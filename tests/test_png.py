@@ -184,10 +184,6 @@ def test_materialize_tiles_spreads_skew(spark):
     out = binary.materialize_tiles(df, tile_size=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(id" in plan and ", j" in plan
-    no_spread = binary.materialize_tiles(df, tile_size=8, spread_skew=False)
-    assert "hashpartitioning(id" not in (
-        no_spread._jdf.queryExecution().executedPlan().toString()
-    )
 
 
 def test_png_roundtrip_property_hypothesis():
